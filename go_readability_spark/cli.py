@@ -205,9 +205,32 @@ def cmd_serve(args) -> int:
     return 0
 
 
+def _run_extraction_sink(args, pages, output_dir, checkpoint_dir,
+                         tag: str = "") -> None:
+    """Extract `pages` into `output_dir` through the sink the extract
+    flags pick: the atomic task-committed sink (--atomic-sink) or the
+    Spark-committer job."""
+    from .plans import run_extraction_job, run_extraction_job_atomic
+
+    if args.atomic_sink:
+        n = run_extraction_job_atomic(
+            pages, output_dir=output_dir, checkpoint_dir=checkpoint_dir,
+            n_buckets=args.buckets, num_partitions=args.partitions,
+            resume=not args.no_resume)
+        print(f"atomic sink: {n} buckets written this run{tag}",
+              file=sys.stderr)
+    else:
+        run_extraction_job(
+            pages, output_dir=output_dir, checkpoint_dir=checkpoint_dir,
+            n_buckets=args.buckets, num_partitions=args.partitions,
+            resume=not args.no_resume,
+            verify_output=not args.no_verify_output,
+            partition_by=(tuple(args.partition_by.split(","))
+                          if args.partition_by else None))
+
+
 def cmd_extract(args) -> int:
-    from .plans import build_session, run_extraction_job, ship_package
-    from .plans.schema import PAGES_SCHEMA
+    from .plans import build_session, ship_package
 
     if getattr(args, "segments", 1) > 1:
         return _cmd_extract_segmented(args)
@@ -235,29 +258,7 @@ def cmd_extract(args) -> int:
             from .sources.pages_table import read_pages
 
             pages = read_pages(spark, args.input, format=args.input_format)
-        if args.atomic_sink:
-            from .plans import run_extraction_job_atomic
-
-            n = run_extraction_job_atomic(
-                pages,
-                output_dir=args.output,
-                checkpoint_dir=args.checkpoint,
-                n_buckets=args.buckets,
-                num_partitions=args.partitions,
-                resume=not args.no_resume,
-            )
-            print(f"atomic sink: {n} buckets written this run", file=sys.stderr)
-        else:
-            run_extraction_job(
-                pages,
-                output_dir=args.output,
-                checkpoint_dir=args.checkpoint,
-                n_buckets=args.buckets,
-                num_partitions=args.partitions,
-                resume=not args.no_resume,
-                verify_output=not args.no_verify_output,
-                partition_by=tuple(args.partition_by.split(",")) if args.partition_by else None,
-            )
+        _run_extraction_sink(args, pages, args.output, args.checkpoint)
     finally:
         spark.stop()
     return 0
@@ -275,7 +276,7 @@ def _cmd_extract_segmented(args) -> int:
     manifests instead)."""
     import os
 
-    from .plans import build_session, run_extraction_job, ship_package
+    from .plans import build_session, ship_package
     from .plans.crawl import _release_job_state, segment_input_files
     from .plans.schema import PAGES_SCHEMA
 
@@ -313,24 +314,9 @@ def _cmd_extract_segmented(args) -> int:
             seg_out = os.path.join(args.output, f"seg={i}")
             seg_ckpt = (os.path.join(args.checkpoint, f"seg={i}")
                         if args.checkpoint else None)
-            if args.atomic_sink:
-                from .plans import run_extraction_job_atomic
-
-                n = run_extraction_job_atomic(
-                    pages, output_dir=seg_out, checkpoint_dir=seg_ckpt,
-                    n_buckets=args.buckets, num_partitions=args.partitions,
-                    resume=not args.no_resume)
-                print(f"atomic sink: {n} buckets written this run "
-                      f"(seg {i}/{len(groups)}, {len(files)} files)",
-                      file=sys.stderr)
-            else:
-                run_extraction_job(
-                    pages, output_dir=seg_out, checkpoint_dir=seg_ckpt,
-                    n_buckets=args.buckets, num_partitions=args.partitions,
-                    resume=not args.no_resume,
-                    verify_output=not args.no_verify_output,
-                    partition_by=(tuple(args.partition_by.split(","))
-                                  if args.partition_by else None))
+            _run_extraction_sink(
+                args, pages, seg_out, seg_ckpt,
+                tag=f" (seg {i}/{len(groups)}, {len(files)} files)")
             _release_job_state(spark)
     finally:
         spark.stop()

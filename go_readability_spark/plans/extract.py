@@ -1,15 +1,16 @@
 """The extraction pipeline: Iceberg/parquet scan → salted repartition →
-Arrow-batched mapInPandas extraction → sink, with per-partition
+Arrow-batched mapInPandas extraction → sink, with per-bucket
 checkpoint/lineage rows for resumability (SURVEY.md §3 'Spark lifecycle').
 
 Design notes for 10^12-row scale:
 
 * Column pruning is explicit: only (url, warc_ts, html) reach the shuffle;
   Catalyst pushes the projection into the parquet/Iceberg scan.
-* Skew (host/size concentration in Common-Crawl) is defused by salting on
-  ``pmod(xxhash64(url), n_buckets)`` and repartitioning on the salt — the
-  only shuffle in the job. Bucket→partition assignment is deterministic,
-  which is what makes bucket-level resume sound.
+* Skew (host/size concentration in Common-Crawl) is defused by one
+  deterministic repartition — the only shuffle in the job — keyed on the
+  salt ``pmod(xxhash64(url), n_buckets)`` or on ``xxhash64(url)`` by the
+  rule in _extraction_plan. Deterministic keys are what make retries and
+  bucket-level resume sound.
 * The extraction itself is partition-local: one ``mapInPandas`` call per
   partition, iterator form, so the compiled regexes and parser setup
   amortize across all Arrow batches of the partition (no per-row Python
@@ -18,6 +19,9 @@ Design notes for 10^12-row scale:
   restart anti-joins pages against completed buckets. On a real cluster the
   checkpoint table is an Iceberg table with transactional appends; in this
   sandbox it is a parquet directory written atomically per task.
+* Every task-side pyarrow write (atomic-sink bucket files, lineage rows)
+  takes its schema from the Spark schemas in plans/schema.py, so the
+  files read back with exactly the types Spark itself writes.
 """
 
 from __future__ import annotations
@@ -29,11 +33,18 @@ import uuid
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from .schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA
+from .schema import ARTICLES_SCHEMA, CHECKPOINT_SCHEMA, SINK_STATS_SCHEMA
 
 DEFAULT_N_BUCKETS = 256
+
+# one full cyclic collection every this many finished tasks per worker
+# (see _maybe_end_of_task_collect)
+_GC_EVERY_TASKS = 8
+
+_TIMESTAMP_COLUMNS = {f.name for f in ARTICLES_SCHEMA.fields
+                      if isinstance(f.dataType, T.TimestampType)}
 
 
 def _output_codec() -> str:
@@ -114,39 +125,40 @@ def _maybe_end_of_task_collect():
     extract_record tears every tree down explicitly, so the only cyclic
     garbage a task can leave is exception-path residue — small and
     bounded.  The old per-task ``gc.collect()`` safety net cost a
-    measured 15-25 ms per task, which the finer r7 partitioning
-    (default_extract_partitions) multiplies by 4x tasks-per-core; one
-    full sweep every ``SPARK_GRAFT_GC_EVERY_PARTITIONS`` tasks (default
-    8) keeps the reused worker's residue bounded at ~1/8 the old
+    measured 15-25 ms per task; one full sweep every ``_GC_EVERY_TASKS``
+    tasks keeps the reused worker's residue bounded at ~1/8 the old
     per-task frequency cost.  Module-level counter: Python workers are
     single-threaded and reused across tasks (spark.python.worker.reuse),
     and this module ships to executors, so the state persists."""
     import gc
 
-    _GC_STATE["tasks"] += 1
-    if _GC_STATE["tasks"] % _GC_STATE["every"] == 0:
+    global _tasks_finished
+    _tasks_finished += 1
+    if _tasks_finished % _GC_EVERY_TASKS == 0:
         gc.collect()
 
 
-_GC_STATE = {
-    "tasks": 0,
-    "every": max(1, int(os.environ.get("SPARK_GRAFT_GC_EVERY_PARTITIONS", "8"))),
-}
+_tasks_finished = 0
 
 
-def make_extractor(checkpoint_dir: str | None = None):
-    """Build the mapInPandas function. Iterator form: per-partition setup
-    runs once, then every Arrow batch streams through."""
-    import pandas as pd
+def make_extractor(checkpoint_dir: str | None = None,
+                   sink_dir: str | None = None):
+    """Build the mapInPandas task function. Iterator form: per-partition
+    setup runs once, then every Arrow batch streams through.
 
-    columns = [f.name for f in ARTICLES_SCHEMA.fields]
+    Without ``sink_dir`` the task yields each batch's article frame as
+    soon as it is extracted (ARTICLES_SCHEMA). With ``sink_dir`` it is the
+    atomic sink's task (run_extraction_job_atomic): it publishes one
+    parquet file per salt bucket and yields only the per-bucket stats
+    rows (SINK_STATS_SCHEMA). With ``checkpoint_dir``, one lineage row per
+    salt bucket lands after the task's output."""
 
     def extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import gc
 
-        started = datetime.now(timezone.utc).replace(tzinfo=None)
-        t0 = time.time()
+        started = datetime.now(timezone.utc)
         bucket_stats: dict[str, list] = {}  # salt -> [rows_in, rows_out, errors, bytes_in]
+        bucket_frames: dict[int, list] = {}
 
         # extract_record tears its trees down explicitly, so the cyclic
         # collector has nothing useful to do mid-partition — its full
@@ -155,28 +167,93 @@ def make_extractor(checkpoint_dir: str | None = None):
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
-            yield from _extract_loop(batches, bucket_stats)
+            for pdf, salts in _extract_frames(batches, bucket_stats):
+                if sink_dir is None:
+                    yield pdf
+                    continue
+                for salt_val, group in pdf.groupby(salts, sort=False):
+                    bucket_frames.setdefault(int(salt_val), []).append(group)
         finally:
             if gc_was_enabled:
                 gc.enable()
                 _maybe_end_of_task_collect()
 
+        if sink_dir is not None:
+            _publish_buckets(sink_dir, bucket_frames)
         if checkpoint_dir and bucket_stats:
-            _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, time.time() - t0)
-
-    def _extract_loop(batches, bucket_stats):
-        for pdf in _extract_frames(batches, columns, bucket_stats):
-            yield pdf.drop(columns=["_salt"])
+            # strictly after the sink's data renames (see
+            # run_extraction_job_atomic)
+            _write_checkpoint_rows(checkpoint_dir, bucket_stats, started)
+        if sink_dir is not None:
+            yield _stats_frame(bucket_stats)
 
     return extract_batches
 
 
-def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, elapsed):
+def _extract_frames(batches, bucket_stats):
+    """The per-row extraction loop: yields (article frame, salts) per
+    batch. Per-bucket stats accumulate only when the input carries a salt
+    column; salts is then the batch's salt Series, else None."""
+    import pandas as pd
+
+    columns = ARTICLES_SCHEMA.fieldNames()
+    for pdf in batches:
+        data: dict[str, list] = {c: [] for c in columns}
+        urls = pdf["url"].tolist()
+        htmls = pdf["html"].tolist()
+        warc = pdf["warc_ts"].tolist() if "warc_ts" in pdf.columns else [None] * len(urls)
+        has_salt = "salt" in pdf.columns
+        salts = pdf["salt"].tolist() if has_salt else None
+        for i, (url, html) in enumerate(zip(urls, htmls)):
+            rec = extract_record(url, html)
+            rec["warc_ts"] = warc[i]
+            for c in columns:
+                data[c].append(rec[c])
+            if has_salt:
+                st = bucket_stats.setdefault(str(salts[i]), [0, 0, 0, 0])
+                st[0] += 1
+                st[1] += 0 if rec["error"] else 1
+                st[2] += 1 if rec["error"] else 0
+                st[3] += len(html) if html is not None else 0
+        yield (article_frame(data),
+               pd.Series(salts, dtype="int64") if has_salt else None)
+
+
+def article_frame(data: dict[str, list]):
+    """pandas frame of article columns (any subset of ARTICLES_SCHEMA's),
+    with the dtypes Arrow maps onto the Spark types: datetime64 for the
+    timestamps, int32 for length."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            c: (
+                pd.to_datetime(pd.Series(v, dtype="object"), errors="coerce")
+                if c in _TIMESTAMP_COLUMNS
+                else pd.Series(v, dtype="int32")
+                if c == "length"
+                else v
+            )
+            for c, v in data.items()
+        }
+    )
+
+
+def _stats_frame(bucket_stats):
+    """The atomic sink's per-bucket stats rows (SINK_STATS_SCHEMA)."""
+    import pandas as pd
+
+    return pd.DataFrame([(int(k), *map(int, v)) for k, v in bucket_stats.items()],
+                        columns=SINK_STATS_SCHEMA.fieldNames())
+
+
+def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started):
     """Append one lineage row per completed salt bucket. Atomic per task:
     written to a unique file name, so concurrent tasks never collide.
     (Production: Iceberg transactional append — same rows, same schema.)"""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     try:
         from pyspark import TaskContext
@@ -186,31 +263,62 @@ def _write_checkpoint_rows(checkpoint_dir, bucket_stats, started, elapsed):
     except Exception:
         attempt = 1
 
-    finished = datetime.now(timezone.utc).replace(tzinfo=None)
-    rows = {
-        "partition_key": list(bucket_stats.keys()),
-        "attempt": [attempt] * len(bucket_stats),
-        "status": ["done"] * len(bucket_stats),
-        "rows_in": [int(v[0]) for v in bucket_stats.values()],
-        "rows_out": [int(v[1]) for v in bucket_stats.values()],
-        "parse_errors": [int(v[2]) for v in bucket_stats.values()],
-        "bytes_in": [int(v[3]) for v in bucket_stats.values()],
-        "started_at": [started] * len(bucket_stats),
-        "finished_at": [finished] * len(bucket_stats),
-    }
-    schema = pa.schema(
-        [
-            ("partition_key", pa.string()), ("attempt", pa.int32()),
-            ("status", pa.string()), ("rows_in", pa.int64()),
-            ("rows_out", pa.int64()), ("parse_errors", pa.int64()),
-            ("bytes_in", pa.int64()), ("started_at", pa.timestamp("us")),
-            ("finished_at", pa.timestamp("us")),
-        ]
-    )
+    n = len(bucket_stats)
+    finished = datetime.now(timezone.utc)
+    counts = [[int(x) for x in col] for col in zip(*bucket_stats.values())]
+    columns = [list(bucket_stats), [attempt] * n, ["done"] * n, *counts,
+               [started] * n, [finished] * n]
+    table = pa.table(dict(zip(CHECKPOINT_SCHEMA.fieldNames(), columns)),
+                     schema=to_arrow_schema(CHECKPOINT_SCHEMA))
     os.makedirs(checkpoint_dir, exist_ok=True)
     path = os.path.join(checkpoint_dir, f"ckpt-{uuid.uuid4().hex}.parquet")
-    pq.write_table(pa.table(rows, schema=schema), path,
-                   compression=_output_codec())
+    pq.write_table(table, path, compression=_output_codec())
+
+
+def _publish_buckets(output_dir, bucket_frames):
+    """Write each salt bucket's articles to ``salt=<n>/part-<n>.parquet``:
+    staged under a hidden name, then os.replace()d — atomic, so readers
+    (including the resume verifier) never see partial data. Naive
+    timestamps are written as UTC, the session time zone build_session
+    sets, which is how Spark itself converts them on the other sink."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(ARTICLES_SCHEMA)
+    sweep_horizon = time.time() - 3600
+    for salt_val, frames in bucket_frames.items():
+        bucket_dir = os.path.join(output_dir, f"salt={salt_val}")
+        os.makedirs(bucket_dir, exist_ok=True)
+        final = os.path.join(bucket_dir, f"part-{salt_val:05d}.parquet")
+        # staging name MUST be dot-prefixed: Spark/parquet directory
+        # listings ignore '.'/'_' files, so a kill mid-write (ENOSPC,
+        # SIGKILL) leaves garbage that readers and the resume
+        # verifier never see.  (A non-hidden '<final>.tmp-…' name
+        # broke the 10M crawl-fetch resume: the truncated staging
+        # file failed the whole output read.)  Stale tmps from dead
+        # attempts are swept before this attempt writes its own —
+        # but only ones older than an hour: a CONCURRENT attempt for
+        # the same bucket (speculative or zombie task) may still be
+        # writing its staging file, and unlinking it mid-write would
+        # turn its os.replace into FileNotFoundError.  Younger tmps
+        # are left alone; being dot-prefixed they are invisible to
+        # readers and the resume verifier regardless.
+        for stale in glob.glob(os.path.join(
+                bucket_dir, f".part-{salt_val:05d}.parquet.tmp-*")):
+            try:
+                if os.path.getmtime(stale) < sweep_horizon:
+                    os.remove(stale)
+            except OSError:
+                pass
+        tmp = os.path.join(
+            bucket_dir,
+            f".part-{salt_val:05d}.parquet.tmp-{uuid.uuid4().hex}")
+        table = pa.Table.from_pandas(pd.concat(frames, ignore_index=True),
+                                     schema=schema, preserve_index=False)
+        pq.write_table(table, tmp, compression=_output_codec())
+        os.replace(tmp, final)  # atomic publish
 
 
 def with_salt(pages: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
@@ -232,14 +340,10 @@ def default_extract_partitions(spark, n_buckets: int) -> int:
     32 partitions beating 128 by ~2x on all three extraction benches.
     The default stays the session's shuffle-partition setting, capped
     at ``n_buckets`` (the salt has only that many distinct values, so
-    extra partitions sit empty).  ``SPARK_GRAFT_EXTRACT_TASKS_PER_CORE``
-    (default 1) raises the floor for real clusters, where executors
-    run long enough that per-task overhead amortizes and the 20x
-    per-doc skew tail does dominate a wave."""
+    extra partitions sit empty), and never below one task per core."""
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     par = max(1, spark.sparkContext.defaultParallelism)
-    factor = int(os.environ.get("SPARK_GRAFT_EXTRACT_TASKS_PER_CORE", "1"))
-    return max(1, min(int(n_buckets), max(shuffle, factor * par)))
+    return max(1, min(int(n_buckets), max(shuffle, par)))
 
 
 def completed_buckets(spark, checkpoint_dir: str,
@@ -289,25 +393,39 @@ def completed_buckets(spark, checkpoint_dir: str,
     )
 
 
-def extract_pages(
-    pages: DataFrame,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
-    resume: bool = True,
-    verify_output_dir: str | None = None,
-) -> DataFrame:
-    """The extraction plan:
+def extraction_stage(pages: DataFrame, checkpoint_dir: str | None = None,
+                     sink_dir: str | None = None) -> DataFrame:
+    """The partition-local extraction stage over (url, warc_ts, html[,
+    salt]) rows: one mapInPandas running the make_extractor task loop,
+    with no exchange of its own. Its rows are ARTICLES_SCHEMA, or the
+    atomic sink's per-bucket stats (SINK_STATS_SCHEMA) with ``sink_dir``."""
+    schema = SINK_STATS_SCHEMA if sink_dir else ARTICLES_SCHEMA
+    return pages.mapInPandas(make_extractor(checkpoint_dir, sink_dir),
+                             schema=schema)
+
+
+def _extraction_plan(pages, n_buckets, num_partitions, checkpoint_dir,
+                     resume, verify_output_dir, sink_dir=None) -> DataFrame:
+    """The one extraction plan, behind extract_pages and
+    run_extraction_job_atomic:
 
     pages → select(url, warc_ts, html)          # column pruning to the scan
           → withColumn(salt, pmod(xxhash64(url), B))
           → [left_anti join completed buckets]  # resume (broadcast — tiny)
-          → repartition(P, salt)                # the one shuffle; defuses skew
-          → mapInPandas(extract, ARTICLES)      # partition-local, Arrow batches
-    """
+          → repartition(P, key)                 # the one shuffle; defuses skew
+          → extraction_stage                    # partition-local, Arrow batches
+
+    The key is ``salt`` when each bucket must stay in one task — there is
+    a checkpoint (it marks whole buckets done, so a bucket split across
+    tasks could be half-recorded as complete) or the sink is the atomic
+    one (one file per bucket). Otherwise it is ``xxhash64(url)``: n_buckets
+    salt values hashed into P partitions leave measured row-count
+    imbalance (guide §2.5: use 20-100x more distinct keys than partitions;
+    at n_buckets/P = 8 the per-task row counts ranged 15-69 around a mean
+    of 31 on the fixture bench, max task 1.8s vs 0.97s mean), while the
+    full-width hash spreads counts multinomially and stays retry-safe."""
     spark = pages.sparkSession
-    df = pages.select("url", "warc_ts", "html")
-    df = with_salt(df, n_buckets)
+    df = with_salt(pages.select("url", "warc_ts", "html"), n_buckets)
 
     if resume and checkpoint_dir:
         done = completed_buckets(spark, checkpoint_dir,
@@ -318,187 +436,26 @@ def extract_pages(
 
     if num_partitions is None:
         num_partitions = default_extract_partitions(spark, n_buckets)
-    if checkpoint_dir:
-        # bucket-level resume requires each salt bucket to live in exactly
-        # one task: the checkpoint marks whole buckets done, so a bucket
-        # split across tasks could be half-recorded as complete
-        df = df.repartition(num_partitions, "salt")
-    else:
-        # no resume semantics on this plan: same single exchange, same
-        # deterministic skew defense, but keyed on the full-width hash.
-        # n_buckets salt values hashed into P partitions leave measured
-        # row-count imbalance (guide §2.5: use 20-100x more distinct keys
-        # than partitions; at n_buckets/P = 8 the per-task row counts
-        # ranged 15-69 around a mean of 31 on the fixture bench, max task
-        # 1.8s vs 0.97s mean). xxhash64(url) spreads counts multinomially
-        # and stays retry-safe (deterministic key, not rand()).
-        df = df.repartition(num_partitions, F.xxhash64(F.col("url")))
-
-    return df.mapInPandas(make_extractor(checkpoint_dir), schema=ARTICLES_SCHEMA)
+    whole_buckets = bool(checkpoint_dir or sink_dir)
+    key = F.col("salt") if whole_buckets else F.xxhash64(F.col("url"))
+    return extraction_stage(df.repartition(num_partitions, key),
+                            checkpoint_dir, sink_dir)
 
 
-def make_sink_extractor(output_dir: str, checkpoint_dir: str | None):
-    """mapInPandas function for the ATOMIC task-committed sink: the
-    extraction output is written per salt bucket straight into the
-    articles table from inside the task, and the mapInPandas result is
-    only the tiny per-bucket stats relation.
-
-    The properties that make mid-job resume REAL on a plain filesystem
-    (Spark's own committer only exposes output at job commit, so a
-    mid-job kill loses everything):
-
-    * per-bucket data file `salt=<n>/part-<n>.parquet` written to a tmp
-      name and os.replace()d — atomic, so readers (including the resume
-      verifier) never see partial data;
-    * the file name is DETERMINISTIC per bucket and repartition(salt)
-      puts each bucket in exactly one partition, so a retried /
-      speculative / resumed task overwrites its own bucket instead of
-      duplicating it — the write is idempotent;
-    * the checkpoint lineage row lands strictly AFTER the bucket's data
-      rename: a crash between the two leaves an orphan data file that
-      the next attempt simply overwrites, never a 'done' row without
-      visible data (the silent-loss window the verifier guards).
-    """
-    import pandas as pd
-
-    columns = [f.name for f in ARTICLES_SCHEMA.fields]
-
-    def _bucket_table(frames):
-        import pyarrow as pa
-
-        pdf = pd.concat(frames, ignore_index=True)
-        schema = pa.schema(
-            [
-                ("url", pa.string()), ("warc_ts", pa.timestamp("us")),
-                ("title", pa.string()), ("byline", pa.string()),
-                ("content", pa.string()), ("text_content", pa.string()),
-                ("length", pa.int32()), ("excerpt", pa.string()),
-                ("site_name", pa.string()), ("image", pa.string()),
-                ("favicon", pa.string()), ("lang", pa.string()),
-                ("published_time", pa.timestamp("us")),
-                ("modified_time", pa.timestamp("us")),
-                ("readerable", pa.bool_()), ("error", pa.string()),
-            ]
-        )
-        return pa.Table.from_pandas(pdf[columns], schema=schema,
-                                    preserve_index=False)
-
-    def sink_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import gc
-
-        import pyarrow.parquet as pq
-
-        started = datetime.now(timezone.utc).replace(tzinfo=None)
-        t0 = time.time()
-        per_bucket_frames: dict[int, list] = {}
-        bucket_stats: dict[str, list] = {}
-
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for pdf in _extract_frames(batches, columns, bucket_stats):
-                for salt_val, group in pdf.groupby("_salt", sort=False):
-                    per_bucket_frames.setdefault(int(salt_val), []).append(
-                        group.drop(columns=["_salt"])
-                    )
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-                _maybe_end_of_task_collect()
-
-        written = []
-        for salt_val, frames in per_bucket_frames.items():
-            bucket_dir = os.path.join(output_dir, f"salt={salt_val}")
-            os.makedirs(bucket_dir, exist_ok=True)
-            final = os.path.join(bucket_dir, f"part-{salt_val:05d}.parquet")
-            # staging name MUST be dot-prefixed: Spark/parquet directory
-            # listings ignore '.'/'_' files, so a kill mid-write (ENOSPC,
-            # SIGKILL) leaves garbage that readers and the resume
-            # verifier never see.  (A non-hidden '<final>.tmp-…' name
-            # broke the 10M crawl-fetch resume: the truncated staging
-            # file failed the whole output read.)  Stale tmps from dead
-            # attempts are swept before this attempt writes its own —
-            # but only ones older than an hour: a CONCURRENT attempt for
-            # the same bucket (speculative or zombie task) may still be
-            # writing its staging file, and unlinking it mid-write would
-            # turn its os.replace into FileNotFoundError.  Younger tmps
-            # are left alone; being dot-prefixed they are invisible to
-            # readers and the resume verifier regardless.
-            sweep_horizon = time.time() - 3600
-            for stale in glob.glob(os.path.join(
-                    bucket_dir, f".part-{salt_val:05d}.parquet.tmp-*")):
-                try:
-                    if os.path.getmtime(stale) < sweep_horizon:
-                        os.remove(stale)
-                except OSError:
-                    pass
-            tmp = os.path.join(
-                bucket_dir,
-                f".part-{salt_val:05d}.parquet.tmp-{uuid.uuid4().hex}")
-            pq.write_table(_bucket_table(frames), tmp,
-                           compression=_output_codec())
-            os.replace(tmp, final)  # atomic publish
-            written.append(salt_val)
-
-        if checkpoint_dir and bucket_stats:
-            # strictly after the data renames (see docstring)
-            _write_checkpoint_rows(checkpoint_dir, bucket_stats, started,
-                                   time.time() - t0)
-
-        stats = {
-            "salt": [], "rows_in": [], "rows_out": [], "parse_errors": [],
-            "bytes_in": [],
-        }
-        for key, v in bucket_stats.items():
-            stats["salt"].append(int(key))
-            stats["rows_in"].append(int(v[0]))
-            stats["rows_out"].append(int(v[1]))
-            stats["parse_errors"].append(int(v[2]))
-            stats["bytes_in"].append(int(v[3]))
-        yield pd.DataFrame(stats)
-
-    return sink_batches
-
-
-def _extract_frames(batches, columns, bucket_stats):
-    """Shared extraction loop: yields article DataFrames with a `_salt`
-    helper column; per-bucket stats accumulate only when the input
-    carries a salt column (unsalted inputs get no checkpoint rows,
-    matching the Spark-sink path's behavior)."""
-    import pandas as pd
-
-    for pdf in batches:
-        data: dict[str, list] = {c: [] for c in columns}
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        warc = pdf["warc_ts"].tolist() if "warc_ts" in pdf.columns else [None] * len(urls)
-        has_salt = "salt" in pdf.columns
-        salts = pdf["salt"].tolist() if has_salt else [0] * len(urls)
-        for i, (url, html) in enumerate(zip(urls, htmls)):
-            rec = extract_record(url, html)
-            rec["warc_ts"] = warc[i]
-            for c in columns:
-                data[c].append(rec[c])
-            if has_salt:
-                st = bucket_stats.setdefault(str(salts[i]), [0, 0, 0, 0])
-                st[0] += 1
-                st[1] += 0 if rec["error"] else 1
-                st[2] += 1 if rec["error"] else 0
-                st[3] += len(html) if html is not None else 0
-        out = pd.DataFrame(
-            {
-                c: (
-                    pd.to_datetime(pd.Series(data[c], dtype="object"), errors="coerce")
-                    if c in ("published_time", "modified_time", "warc_ts")
-                    else pd.Series(data[c], dtype="int32")
-                    if c == "length"
-                    else data[c]
-                )
-                for c in columns
-            }
-        )
-        out["_salt"] = pd.Series(salts, dtype="int64")
-        yield out
+def extract_pages(
+    pages: DataFrame,
+    n_buckets: int = DEFAULT_N_BUCKETS,
+    num_partitions: int | None = None,
+    checkpoint_dir: str | None = None,
+    resume: bool = True,
+    verify_output_dir: str | None = None,
+) -> DataFrame:
+    """Extract every page to an ARTICLES_SCHEMA row through the extraction
+    plan (_extraction_plan); with ``checkpoint_dir`` each task also
+    appends lineage rows and, with ``resume``, completed buckets are
+    skipped (verified against ``verify_output_dir`` when given)."""
+    return _extraction_plan(pages, n_buckets, num_partitions, checkpoint_dir,
+                            resume, verify_output_dir)
 
 
 def run_extraction_job_atomic(
@@ -516,30 +473,27 @@ def run_extraction_job_atomic(
     BENCH/BASELINE.md round 3). This is the shape an Iceberg sink gives
     for free; here the atomicity unit is one bucket file + rename.
 
+    The properties that make mid-job resume REAL on a plain filesystem
+    (Spark's own committer only exposes output at job commit, so a
+    mid-job kill loses everything):
+
+    * each bucket's data file is staged and renamed into place, so
+      readers never see partial data (_publish_buckets);
+    * the file name is DETERMINISTIC per bucket and the salt-keyed
+      exchange puts each bucket in exactly one task, so a retried /
+      speculative / resumed task overwrites its own bucket instead of
+      duplicating it — the write is idempotent;
+    * the checkpoint lineage row lands strictly AFTER the bucket's data
+      rename: a crash between the two leaves an orphan data file that
+      the next attempt simply overwrites, never a 'done' row without
+      visible data (the silent-loss window the verifier guards).
+
     Returns the number of buckets written this run (0 on a no-op
     resume)."""
-    spark = pages.sparkSession
-    df = pages.select("url", "warc_ts", "html")
-    df = with_salt(df, n_buckets)
-
-    if resume and checkpoint_dir:
-        done = completed_buckets(spark, checkpoint_dir,
-                                 verify_output_dir=output_dir,
-                                 n_buckets=n_buckets)
-        if done is not None:
-            df = df.join(F.broadcast(done), "salt", "left_anti")
-
-    if num_partitions is None:
-        num_partitions = default_extract_partitions(spark, n_buckets)
-    df = df.repartition(num_partitions, "salt")
-
-    from .schema import SINK_STATS_SCHEMA
-
+    stats = _extraction_plan(pages, n_buckets, num_partitions, checkpoint_dir,
+                             resume, verify_output_dir=output_dir,
+                             sink_dir=output_dir)
     os.makedirs(output_dir, exist_ok=True)
-    stats = df.mapInPandas(
-        make_sink_extractor(output_dir, checkpoint_dir),
-        schema=SINK_STATS_SCHEMA,
-    )
     return stats.count()
 
 

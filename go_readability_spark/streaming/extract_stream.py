@@ -1,13 +1,13 @@
-"""Structured Streaming wrapper: the same extraction UDF over a streaming
-`pages` source (SURVEY.md §1: 'Structured Streaming is an optional later
-wrapper (same UDF under foreachBatch)')."""
+"""Structured Streaming wrapper: the batch plan's extraction stage over a
+streaming `pages` source (SURVEY.md §1: 'Structured Streaming is an
+optional later wrapper (same UDF under foreachBatch)')."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..plans.extract import make_extractor, with_salt
-from ..plans.schema import ARTICLES_SCHEMA, PAGES_SCHEMA
+from ..plans.extract import extraction_stage
+from ..plans.schema import PAGES_SCHEMA
 
 
 def read_pages_stream(spark, path: str, max_files_per_trigger: int = 4) -> DataFrame:
@@ -45,11 +45,11 @@ def read_pages_stream_warc(
     )
 
 
-def extract_pages_stream(pages_stream: DataFrame, n_buckets: int = 64) -> DataFrame:
-    """Streaming extraction: stateless mapInPandas, so it composes with any
-    sink; watermarks aren't needed (per-row transform, no event-time agg)."""
-    df = with_salt(pages_stream.select("url", "warc_ts", "html"), n_buckets)
-    return df.mapInPandas(make_extractor(None), schema=ARTICLES_SCHEMA)
+def extract_pages_stream(pages_stream: DataFrame) -> DataFrame:
+    """Streaming extraction: the batch plan's extraction stage, stateless
+    and without an exchange, so it composes with any sink; watermarks
+    aren't needed (per-row transform, no event-time agg)."""
+    return extraction_stage(pages_stream.select("url", "warc_ts", "html"))
 
 
 def run_discovery_stream(
@@ -98,7 +98,6 @@ def run_discovery_stream(
     downstream snapshot dedup (operators/snapshots.py latest_snapshot)
     or the Bloom seen-filter (operators/bloom.py), both batch
     operators over the accumulated output."""
-    from ..plans.extract import make_extractor, with_salt
     from ..sources.cdx import cdx_fetch_plan, parse_cdxj
     from ..sources.warc import pages_from_fetch_plan
 
@@ -135,9 +134,7 @@ def run_discovery_stream(
             from ..functions.extraction_udfs import readerable
 
             pages = pages.where(readerable(F.col("html")))
-        arts = with_salt(pages.select("url", "warc_ts", "html"), 64) \
-            .mapInPandas(make_extractor(None), schema=ARTICLES_SCHEMA)
-        arts.write.mode("overwrite").parquet(
+        extract_pages_stream(pages).write.mode("overwrite").parquet(
             f"{output_dir}/batch={batch_id}")
         if seen_bloom_dir is not None:
             from ..operators.bloom import bloom_store_record

@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 
 from go_readability_spark.operators import brute_force_topk, minhash_dedup_pairs
 from go_readability_spark.plans import build_session, extract_pages
+from go_readability_spark.plans.extract import _extraction_plan
 from go_readability_spark.sources import synth_pages_distributed
+from go_readability_spark.streaming import extract_pages_stream, read_pages_stream
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -46,6 +48,16 @@ def main():
         out.append("## extract_pages with checkpoint resume (broadcast left_anti)\n```")
         out.append(formatted(extract_pages(pages, n_buckets=16, num_partitions=2,
                                            checkpoint_dir=ckpt, resume=True)))
+        out.append("```\n")
+
+        out.append("## run_extraction_job_atomic (salt-keyed exchange → "
+                   "per-bucket publish, stats rows)\n```")
+        out.append(formatted(_extraction_plan(pages, 16, 2, None, True, None,
+                                              sink_dir=f"{tmp}/atomic")))
+        out.append("```\n")
+
+        out.append("## extract_pages_stream (the extraction stage, no exchange)\n```")
+        out.append(formatted(extract_pages_stream(read_pages_stream(spark, pages_path))))
         out.append("```\n")
 
         out.append("## filter pushdown into the pages scan\n```")

@@ -10,12 +10,17 @@ import pytest
 from conftest import TEST_PAGES, fixture_cases
 
 from go_readability_spark.readability import from_url
+from go_readability_spark.sources.synthetic import synth_page
 
 
 @pytest.fixture(scope="module")
 def httpd():
     fixture = os.path.join(TEST_PAGES, "001", "source.html")
-    body = open(fixture, "rb").read() if os.path.exists(fixture) else b"<p>hello world</p>"
+    if os.path.exists(fixture):
+        body = open(fixture, "rb").read()
+    else:
+        # an in-repo page the parser reads as an article
+        body = synth_page(1, 0, "example.org", 12)["html"]
 
     class Handler(http.server.BaseHTTPRequestHandler):
         def do_GET(self):

@@ -108,19 +108,36 @@ def test_duplicate_clusters(spark):
 
 
 def test_sql_registered_extraction_udfs(spark, tmp_path):
-    from go_readability_spark.functions.extraction_udfs import register_all
+    """readability(url, html) returns extract_record's article as a struct,
+    evaluated once per row however many of its fields a query selects;
+    readerable(html) stays the cheap gate in front of it."""
+    from go_readability_spark.functions.extraction_udfs import (
+        ARTICLE_STRUCT,
+        register_all,
+    )
+    from go_readability_spark.plans import extract_record
     from go_readability_spark.plans.schema import PAGES_SCHEMA
     from go_readability_spark.sources import synth_corpus_rows
 
     register_all(spark)
     rows = synth_corpus_rows(6, seed=21, skew=False)
     spark.createDataFrame(rows, schema=PAGES_SCHEMA).createOrReplaceTempView("pages_v")
-    out = spark.sql(
-        "SELECT url, readability_title(html) AS t, length(readability_text(html)) AS n "
-        "FROM pages_v WHERE readerable(html)"
-    ).collect()
+    two_fields = spark.sql(
+        "SELECT url, a.title AS t, length(a.text_content) AS n FROM "
+        "(SELECT url, readability(url, html) AS a FROM pages_v WHERE readerable(html))"
+    )
+    plan = two_fields._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("readability(") == 1, plan
+    out = two_fields.collect()
     assert len(out) == 6
     assert all(r["t"] and r["n"] > 200 for r in out)
+
+    got = {r["url"]: r["a"].asDict() for r in spark.sql(
+        "SELECT url, readability(url, html) AS a FROM pages_v").collect()}
+    assert len(got) == 6
+    for row in rows:
+        want = extract_record(row["url"], row["html"])
+        assert got[row["url"]] == {c: want[c] for c in ARTICLE_STRUCT.fieldNames()}
 
 
 def test_streaming_windowed_metrics(spark, tmp_path):

@@ -66,20 +66,37 @@ def test_extract_exchange_key_follows_resume_semantics(spark, pages_parquet, tmp
     each bucket must live in one task); without a checkpoint_dir the same
     exchange uses the full-width url hash — n_buckets values hashed into P
     partitions leave measured ~±40% per-task row-count imbalance at
-    n_buckets/P = 8 (guide §2.5 wants 20-100x more keys than partitions)."""
+    n_buckets/P = 8 (guide §2.5 wants 20-100x more keys than partitions).
+    The atomic sink publishes one file per bucket, so its plan is
+    salt-keyed too; the streaming stage is partition-local, no exchange."""
     from go_readability_spark.plans import extract_pages
+    from go_readability_spark.plans.extract import _extraction_plan
+    from go_readability_spark.streaming import extract_pages_stream, read_pages_stream
+
+    def exchange_key(plan):
+        assert plan.count("Exchange") == 1, plan
+        m = re.search(r"hashpartitioning\(([^)]*)", plan)
+        assert m, plan
+        return m.group(1)
 
     pages = spark.read.parquet(pages_parquet)
     no_resume = _plan(extract_pages(pages, n_buckets=16, num_partitions=4))
-    m = re.search(r"hashpartitioning\(([^)]*)", no_resume)
-    assert m and "xxhash64(url" in m.group(1), no_resume
-    assert no_resume.count("Exchange") == 1, no_resume
+    assert "xxhash64(url" in exchange_key(no_resume), no_resume
 
     ckpt = str(tmp_path / "ckpt_key")
     resumable = _plan(extract_pages(pages, n_buckets=16, num_partitions=4,
                                     checkpoint_dir=ckpt))
-    m = re.search(r"hashpartitioning\(salt", resumable)
-    assert m, resumable
+    key = exchange_key(resumable)
+    assert key.startswith("salt") and "xxhash64(url" not in key, resumable
+
+    atomic = _plan(_extraction_plan(pages, 16, 4, None, True, None,
+                                    sink_dir=str(tmp_path / "atomic_key")))
+    assert exchange_key(atomic).startswith("salt"), atomic
+
+    stream = extract_pages_stream(read_pages_stream(spark, pages_parquet))
+    explained = spark._jvm.PythonSQLUtils.explainString(
+        stream._jdf.queryExecution(), "simple")
+    assert "MapInPandas" in explained and "Exchange" not in explained, explained
 
 
 def test_filter_pushdown_to_scan(spark, pages_parquet):

@@ -545,7 +545,7 @@ def test_output_codec_knob(tmp_path, monkeypatch):
     ck = str(tmp_path / "ck")
     from datetime import datetime, timezone
     started = datetime.now(timezone.utc).replace(tzinfo=None)
-    _write_checkpoint_rows(ck, {"7": [3, 3, 0, 123]}, started, 0.01)
+    _write_checkpoint_rows(ck, {"7": [3, 3, 0, 123]}, started)
     import glob
     f = glob.glob(f"{ck}/ckpt-*.parquet")[0]
     meta = pq.ParquetFile(f).metadata
